@@ -32,8 +32,7 @@ from pyspark.sql import functions as F
 from ..sources.corpus import (
     ensure_min_parallelism,
     read_table,
-    register_session_cache,
-    table_source_key,
+    session_artifact,
 )
 
 
@@ -164,9 +163,7 @@ def make_shingle_udf():
     return shingles
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) exploded distinct shingles — persisted per
     (session, input) like the materialized KG (plans/pipeline.get_kg):
@@ -175,28 +172,19 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_pairs run re-scans and re-shingles the corpus three times.
     On a cluster this is the natural intermediate table between the
     corpus and the dedup family."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        shingle_udf = make_shingle_udf()
-        sh = (
-            dedup_corpus(spark, sf_dir, lift=True)
-            .select(
-                "doc_id",
-                F.explode_outer(shingle_udf(F.col("text"))).alias("shingle"),
-            )
-            .filter(F.col("shingle").isNotNull())
-            .persist()
+    shingle_udf = make_shingle_udf()
+    return (
+        dedup_corpus(spark, sf_dir, lift=True)
+        .select(
+            "doc_id",
+            F.explode_outer(shingle_udf(F.col("text"))).alias("shingle"),
         )
-        _SHINGLE_CACHE[key] = sh
-    return _SHINGLE_CACHE[key]
+        .filter(F.col("shingle").isNotNull())
+        .persist()
+    )
 
 
-_SIG_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_CAND_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_SIZES_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_INTER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per doc: h0..h{k-1} = min over shingles of md5('<seed>:'||s).
 
@@ -219,32 +207,26 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full shingle frame (guide §1.2: remove repeated passes;
     on a cluster this is the persisted signature table next to the
     shingle table)."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SIG_CACHE:
-        sh = doc_shingles(spark, sf_dir)
-        aggs = [
-            F.min(
-                F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))
-            ).alias(f"h{s}")
-            for s in range(N_HASHES)
-        ]
-        _SIG_CACHE[key] = sh.groupBy("doc_id").agg(*aggs).persist()
-    return _SIG_CACHE[key]
+    sh = doc_shingles(spark, sf_dir)
+    aggs = [
+        F.min(
+            F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))
+        ).alias(f"h{s}")
+        for s in range(N_HASHES)
+    ]
+    return sh.groupBy("doc_id").agg(*aggs).persist()
 
 
+@session_artifact
 def doc_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sh) distinct-shingle counts — the Jaccard denominator
     side, session-cached (r7): four verify paths each re-aggregated the
     shingle frame for it."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _SIZES_CACHE:
-        sh = doc_shingles(spark, sf_dir)
-        _SIZES_CACHE[key] = (
-            sh.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
-        )
-    return _SIZES_CACHE[key]
+    sh = doc_shingles(spark, sf_dir)
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
 
 
+@session_artifact
 def candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(a, b, n_inter) exact shingle-intersection counts for every LSH
     candidate pair — THE shared verify kernel (candidates ⋈ shingles ⋈
@@ -252,23 +234,19 @@ def candidate_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment, and the ppm-scored batch rollups each re-executed this
     double equi-join, the most expensive plan in the dedup family. The
     cache is bounded by the candidate set, not the corpus."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _INTER_CACHE:
-        cand = minhash_candidates(spark, sf_dir)
-        sh = doc_shingles(spark, sf_dir)
-        inter = (
-            cand.join(sh.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-            .join(
-                sh.alias("sb"),
-                (F.col("b") == F.col("sb.doc_id"))
-                & (F.col("sa.shingle") == F.col("sb.shingle")),
-            )
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("n_inter"))
-            .persist()
+    cand = minhash_candidates(spark, sf_dir)
+    sh = doc_shingles(spark, sf_dir)
+    return (
+        cand.join(sh.alias("sa"), F.col("a") == F.col("sa.doc_id"))
+        .join(
+            sh.alias("sb"),
+            (F.col("b") == F.col("sb.doc_id"))
+            & (F.col("sa.shingle") == F.col("sb.shingle")),
         )
-        _INTER_CACHE[key] = inter
-    return _INTER_CACHE[key]
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_inter"))
+        .persist()
+    )
 
 
 def _band_cols() -> list[tuple[int, Column]]:
@@ -294,31 +272,28 @@ def _band_frame(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.key")
 
 
+@session_artifact
 def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: docs sharing any band bucket → distinct (a, b) pairs,
     a < b. The join key is (band_idx, band_key) — bucket-local self-join.
     Session-cached (r7): five downstream verify/rollup queries start
     from this bounded pair set."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _CAND_CACHE:
-        sig = minhash_signatures(spark, sf_dir)
-        bands = _band_frame(sig)
-        l = bands.alias("l")
-        r = bands.alias("r")
-        _CAND_CACHE[key] = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
-            )
-            .distinct()
-            .persist()
+    bands = _band_frame(minhash_signatures(spark, sf_dir))
+    l = bands.alias("l")
+    r = bands.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.key") == F.col("r.key"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-    return _CAND_CACHE[key]
+        .select(
+            F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
+        )
+        .distinct()
+        .persist()
+    )
 
 
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,20 +410,8 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_ROUNDS = 3
 
 
-_CLUSTER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _dedup_clusters_build (the
-    iterative final frame is persisted once per application × source ×
-    input, the _ITER_CACHE discipline)."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _CLUSTER_CACHE:
-        _CLUSTER_CACHE[key] = _dedup_clusters_build(spark, sf_dir)
-    return _CLUSTER_CACHE[key]
-
-
-def _dedup_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DELIVERABLE the pair list feeds: near-duplicate
     CLUSTERS with a canonical survivor per cluster — hash-min label
     propagation (the kg_components plan) over the verified Jaccard
@@ -989,8 +952,6 @@ cand AS (
 DECON_N = 4      # shingle width for contamination checks
 DECON_MOD = 97   # doc_id % 97 == 0 → the held-out "benchmark" set
 
-_DECON_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
 
 def _ngrams(text: Column, n: int) -> Column:
     """All n-token shingles (space-tokenized), [] when too short —
@@ -1035,6 +996,7 @@ def make_ngram_udf(n: int):
     return ngrams
 
 
+@session_artifact
 def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the training-corpus op the dedup
     family exists for: flag every training document sharing an
@@ -1045,9 +1007,6 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + one KB-sized build side, no corpus shuffle. Session-cached
     (r7): corpus_export re-derives the contaminated set, and without the
     cache it re-ran the whole ngram kernel + semi-join chain."""
-    key = table_source_key(spark, sf_dir)
-    if key in _DECON_CACHE:
-        return _DECON_CACHE[key]
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = docs.select(
         "doc_id",
@@ -1057,15 +1016,13 @@ def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("shingle").isNotNull())
     is_bench = F.col("doc_id") % DECON_MOD == 0
     bench = F.broadcast(sh.filter(is_bench).select("shingle").distinct())
-    out = (
+    return (
         sh.filter(~is_bench)
         .join(bench, "shingle")
         .groupBy("doc_id")
         .agg(F.countDistinct("shingle").alias("n_shared_shingles"))
         .persist()
     )
-    _DECON_CACHE[key] = out
-    return out
 
 
 def _decon_shingles_sql() -> str:
@@ -1135,9 +1092,7 @@ def make_ngram_pos_udf(n: int):
     return ngram_pos
 
 
-_SPAN_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level dedup: merge the positions of cross-document
     duplicated {DECON_N}-grams into MAXIMAL duplicated spans per
@@ -1167,9 +1122,6 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is session-cached: doc_dup_span_strip and doc_dup_profile
     both start from it, and each used to re-execute the whole
     two-pass chain (guide §1.2: don't compute things twice)."""
-    key = table_source_key(spark, sf_dir)
-    if key in _SPAN_CACHE:
-        return _SPAN_CACHE[key]
     docs = ensure_min_parallelism(
         spark, sf_dir,
         read_table(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -1208,7 +1160,6 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spans.count()
     pos.unpersist()
-    _SPAN_CACHE[key] = spans
     return spans
 
 

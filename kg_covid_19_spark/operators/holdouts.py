@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.corpus import register_session_cache, table_source_key
+from ..sources.corpus import session_artifact
 from ..functions.hashing import hash_mod_sql as _hash_mod_sql
 from ..plans.merged import get_merged
 
@@ -331,33 +331,26 @@ def _global_rank(df: DataFrame, n_parts: int = 32) -> DataFrame:
     return out
 
 
-_UNIV_CACHE: dict[tuple, tuple[DataFrame, int]] = register_session_cache({})
-
-
+@session_artifact
 def _ranked_universe(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
-    """Keyed session cache for the ranked node universe (the get_kg /
-    doc_shingles pattern): one persisted (id, idx) frame per
-    (application, source, input) instead of a fresh persist per
-    invocation — repeated fullscale-negative runs in a bench loop
-    reuse it rather than accumulating pinned storage. The universe is
-    CONSTRUCTED HERE (nodes ∪ edge endpoints, the reference's
-    make_holdouts universe) rather than passed in: a parameter would
-    be silently ignored on cache hit, handing a caller with a
-    different universe the wrong ranking."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _UNIV_CACHE:
-        nodes, edges = get_merged(spark, sf_dir)
-        universe = (
-            nodes.select("id")
-            .unionAll(edges.select(F.col("subject").alias("id")))
-            .unionAll(edges.select(F.col("object").alias("id")))
-            .distinct()
-        )
-        univ = _global_rank(universe)
-        _UNIV_CACHE[key] = (univ, univ.count())
-    return _UNIV_CACHE[key]
+    """The ranked node universe, one persisted (id, idx) frame per
+    session instead of a fresh persist per invocation — repeated
+    fullscale-negative runs in a bench loop reuse it rather than
+    accumulating pinned storage. The universe is CONSTRUCTED HERE
+    (nodes ∪ edge endpoints, the reference's make_holdouts universe)
+    rather than passed in, so the artifact is a function of the input
+    tables alone."""
+    nodes, edges = get_merged(spark, sf_dir)
+    universe = (
+        nodes.select("id")
+        .unionAll(edges.select(F.col("subject").alias("id")))
+        .unionAll(edges.select(F.col("object").alias("id")))
+        .distinct()
+    )
+    univ = _global_rank(universe)
+    return univ, univ.count()
 
 
 def _hash_mod(prefix: str, i: "Column", n: int) -> "Column":

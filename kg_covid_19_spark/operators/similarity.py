@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from ..sources.corpus import (
     ensure_min_parallelism,
     read_table,
-    register_session_cache,
-    table_source_key,
+    session_artifact,
 )
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -85,6 +84,7 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         ),
         min_bytes=4 << 20,
+        table="embeddings",
     )
 
 
@@ -300,29 +300,23 @@ def make_pair_cos_udf():
     return pair_cos
 
 
-_NEARDUP_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = register_session_cache({})
-
-
+@session_artifact
 def _neardup_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(vecs-with-norm, exploded (vec_id, t, bk) bucket side) persisted
-    per (application, input) — the get_kg/doc_shingles keyed-cache
-    pattern, replacing the per-invocation persist that accumulated
-    pinned storage across bench/check loops."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _NEARDUP_CACHE:
-        vecs = (
-            _vectors(spark, sf_dir)
-            .withColumn("nrm", _norm(F.col("v")))
-            .persist()
-        )
-        bucket_udf = make_bucket_udf()
-        side = vecs.select(
-            "vec_id", F.posexplode(bucket_udf(F.col("v"))).alias("t", "bk")
-        ).persist()
-        _NEARDUP_CACHE[key] = (vecs, side)
-    return _NEARDUP_CACHE[key]
+    """(vecs-with-norm, exploded (vec_id, t, bk) bucket side), pinned
+    once per session instead of a per-invocation persist that
+    accumulated pinned storage across bench/check loops."""
+    vecs = (
+        _vectors(spark, sf_dir)
+        .withColumn("nrm", _norm(F.col("v")))
+        .persist()
+    )
+    bucket_udf = make_bucket_udf()
+    side = vecs.select(
+        "vec_id", F.posexplode(bucket_udf(F.col("v"))).alias("t", "bk")
+    ).persist()
+    return vecs, side
 
 
 def emb_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,20 +434,8 @@ def emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_CLUSTER_ROUNDS = 3
 
 
-_EMB_CLUSTER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _emb_clusters_build."""
-    from ..sources.corpus import table_source_key
-
-    key = table_source_key(spark, sf_dir)
-    if key not in _EMB_CLUSTER_CACHE:
-        _EMB_CLUSTER_CACHE[key] = _emb_clusters_build(spark, sf_dir)
-    return _EMB_CLUSTER_CACHE[key]
-
-
-def _emb_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-dedup clusters: hash-min label propagation
     (EMB_CLUSTER_ROUNDS bounded rounds, the doc_dedup_clusters /
     kg_components plan) over the embedding cosine near-dup pair graph

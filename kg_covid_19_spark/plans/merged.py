@@ -12,23 +12,19 @@ from pyspark.sql import functions as F
 
 from ..dictionaries import merged_cte_sql
 from ..operators.merge import graph_stats, merge_edges, merge_nodes, salted_node_fusion
-from ..sources.corpus import register_session_cache, table_source_key
+from ..sources.corpus import session_artifact
 from ..sources.ontology import ontology_edges, ontology_nodes
 from .pipeline import get_kg
 
-_MERGED_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = register_session_cache({})
 
-
+@session_artifact
 def get_merged(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = table_source_key(spark, sf_dir)
-    if key not in _MERGED_CACHE:
-        doc_nodes, doc_edges = get_kg(spark, sf_dir)
-        nodes = merge_nodes([doc_nodes, ontology_nodes(spark)]).persist()
-        edges = merge_edges([doc_edges, ontology_edges(spark)]).persist()
-        nodes.count()
-        edges.count()
-        _MERGED_CACHE[key] = (nodes, edges)
-    return _MERGED_CACHE[key]
+    doc_nodes, doc_edges = get_kg(spark, sf_dir)
+    nodes = merge_nodes([doc_nodes, ontology_nodes(spark)]).persist()
+    edges = merge_edges([doc_edges, ontology_edges(spark)]).persist()
+    nodes.count()
+    edges.count()
+    return nodes, edges
 
 
 def kg_merged_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,6 +86,59 @@ def kg_dangling_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_artifact
+def _ego_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both directions of the merged edge list as distinct (u, v) pairs,
+    pinned: it feeds BOTH ego-export hop joins (the walk-adjacency
+    lesson: no ReusedExchange across sibling joins, so an unpinned
+    frame re-unions and re-distincts the edge list per hop; measured
+    ~2x at sf1)."""
+    _, edges = get_merged(spark, sf_dir)
+    # hash-partition the pinned frame on the hop-join key (r7): the
+    # distinct leaves it partitioned on (u, v), so BOTH hop joins
+    # re-exchanged the full 2|E| frame; partitioned on u the cached
+    # partitioning is reused and only the (smaller) frontier side
+    # shuffles (guide §2.4)
+    # repartition BEFORE distinct: hashpartitioning(u) satisfies the
+    # distinct's clustering requirement on (u, v) (u co-locates every
+    # duplicate), so the dedup runs on the same exchange instead of
+    # adding a second one
+    und = edges.select(
+        F.col("subject").alias("u"), F.col("object").alias("v")
+    ).unionByName(
+        edges.select(
+            F.col("object").alias("u"), F.col("subject").alias("v")
+        )
+    ).repartition(F.col("u")).distinct().persist()
+    und.count()
+    return und
+
+
+@session_artifact
+def _ego_hop1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(seed, node) hop-1 pairs of every entity seed, pinned: hop-1
+    feeds THREE consumers (the hop-2 frontier join, the anti-join, the
+    output union); r7 pins it once — same lesson as the undirected
+    frame (no ReusedExchange across sibling joins, so an unpinned h1
+    re-ran the seed⋈und distinct three times). Bounded: Σ deg(seed)
+    pairs, dictionary-scale seeds."""
+    nodes, _ = get_merged(spark, sf_dir)
+    seeds = F.broadcast(
+        nodes.filter(F.col("category") != "biolink:Publication")
+        .select(F.col("id").alias("seed"))
+        .distinct()
+    )
+    und = _ego_undirected(spark, sf_dir)
+    h1 = (
+        seeds.join(und, F.col("seed") == F.col("u"))
+        .select("seed", F.col("v").alias("node"))
+        .distinct()
+        .persist()
+    )
+    h1.count()
+    return h1
+
+
 def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hop ego-net export per ENTITY seed — the neighborhood-sampling
     table a GNN trainer reads instead of the raw edge list: for every
@@ -105,53 +154,8 @@ def kg_ego_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: two frontier equi-joins on the node key + distinct;
     the broadcast seed set prunes the first join; no per-seed loops,
     no collect."""
-    nodes, edges = get_merged(spark, sf_dir)
-    # the undirected frame feeds BOTH hop joins — pin it once (the
-    # walk-adjacency lesson: no ReusedExchange across sibling joins,
-    # so an unpinned und re-unions and re-distincts the edge list per
-    # hop; measured ~2x at sf1)
-    key = (*table_source_key(spark, sf_dir), "ego_und")
-    if key not in _MERGED_CACHE:
-        # hash-partition the pinned frame on the hop-join key (r7): the
-        # distinct leaves it partitioned on (u, v), so BOTH hop joins
-        # re-exchanged the full 2|E| frame; partitioned on u the cached
-        # partitioning is reused and only the (smaller) frontier side
-        # shuffles (guide §2.4)
-        # repartition BEFORE distinct: hashpartitioning(u) satisfies the
-        # distinct's clustering requirement on (u, v) (u co-locates every
-        # duplicate), so the dedup runs on the same exchange instead of
-        # adding a second one
-        u = edges.select(
-            F.col("subject").alias("u"), F.col("object").alias("v")
-        ).unionByName(
-            edges.select(
-                F.col("object").alias("u"), F.col("subject").alias("v")
-            )
-        ).repartition(F.col("u")).distinct().persist()
-        u.count()
-        _MERGED_CACHE[key] = u
-    und = _MERGED_CACHE[key]
-    seeds = F.broadcast(
-        nodes.filter(F.col("category") != "biolink:Publication")
-        .select(F.col("id").alias("seed"))
-        .distinct()
-    )
-    # hop-1 feeds THREE consumers (the hop-2 frontier join, the
-    # anti-join, the output union); r7 pins it once — same lesson as
-    # the undirected frame above (no ReusedExchange across sibling
-    # joins, so an unpinned h1 re-ran the seed⋈und distinct three
-    # times). Bounded: Σ deg(seed) pairs, dictionary-scale seeds.
-    h1_key = (*table_source_key(spark, sf_dir), "ego_h1")
-    if h1_key not in _MERGED_CACHE:
-        h1p = (
-            seeds.join(und, F.col("seed") == F.col("u"))
-            .select("seed", F.col("v").alias("node"))
-            .distinct()
-            .persist()
-        )
-        h1p.count()
-        _MERGED_CACHE[h1_key] = h1p
-    h1 = _MERGED_CACHE[h1_key]
+    und = _ego_undirected(spark, sf_dir)
+    h1 = _ego_hop1(spark, sf_dir)
     # r7: the old shape shuffled the hop-2 production TWICE — once for
     # its distinct, once more through the anti-join against h1 — before
     # unioning. MIN-hop over (production ∪ h1) is the same set in ONE

@@ -38,9 +38,9 @@ from ..dictionaries import (
 from ..functions.text import extracted_text
 from ..operators.mentions import make_curie_udf
 from ..sources.corpus import (
+    _scan_layout,
     read_table,
-    register_session_cache,
-    table_source_key,
+    session_artifact,
     web_pages,
 )
 
@@ -225,10 +225,6 @@ def build_kg(spark: SparkSession, sf_dir: str,
 # output table of the merge stage; locally it is a persisted DataFrame.
 # ---------------------------------------------------------------------------
 
-_KG_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = register_session_cache({})
-_MENTION_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_ARRAY_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
 
 def pair_expand(curies) -> "F.Column":  # type: ignore[name-defined]
     """Row-local ordered-pair expansion of a sorted mention array:
@@ -260,77 +256,67 @@ def _artifact_partitions(spark: SparkSession, sf_dir: str) -> int:
     no-op at 100 TB (count ≥ existing partitions) and collapses only
     cache-read + projection work locally — the mention kernel's own
     parallelism is untouched (its artifact stays at ingest width)."""
-    from ..sources.corpus import _scan_layout
-
-    _, nbytes = _scan_layout(spark, sf_dir)
-    return max(2, nbytes // (8 << 20))
+    _, nbytes = _scan_layout(spark, sf_dir, "documents")
+    return max(2, (nbytes or 0) // (8 << 20))
 
 
+@session_artifact
 def get_kg(spark: SparkSession, sf_dir: str,
            langs: tuple[str, ...] | None = None) -> tuple[DataFrame, DataFrame]:
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _KG_CACHE:
-        n_parts = _artifact_partitions(spark, sf_dir)
-        nodes, edges = build_kg(spark, sf_dir, langs)
-        nodes = nodes.coalesce(n_parts).persist()
-        edges = edges.coalesce(n_parts).persist()
-        # eager materialization: queries must read the graph, not re-run
-        # the transform per union branch.
-        nodes.count()
-        edges.count()
-        _KG_CACHE[key] = (nodes, edges)
-    return _KG_CACHE[key]
+    n_parts = _artifact_partitions(spark, sf_dir)
+    nodes, edges = build_kg(spark, sf_dir, langs)
+    nodes = nodes.coalesce(n_parts).persist()
+    edges = edges.coalesce(n_parts).persist()
+    # eager materialization: queries must read the graph, not re-run
+    # the transform per union branch.
+    nodes.count()
+    edges.count()
+    return nodes, edges
 
 
+@session_artifact
 def get_mentions(spark: SparkSession, sf_dir: str,
                  langs: tuple[str, ...] | None = None) -> DataFrame:
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _MENTION_CACHE:
-        # derived from the shared mention-array artifact (r7) — a
-        # row-local explode of the cached projection, NOT a second
-        # corpus pass through the mention kernel
-        m = (
-            get_mention_arrays(spark, sf_dir, langs)
-            .select("doc_id", F.explode_outer("curies").alias("curie"))
-            .filter(F.col("curie").isNotNull())
-            .coalesce(_artifact_partitions(spark, sf_dir))
-            .persist()
-        )
-        m.count()
-        _MENTION_CACHE[key] = m
-    return _MENTION_CACHE[key]
+    # derived from the shared mention-array artifact (r7) — a
+    # row-local explode of the cached projection, NOT a second
+    # corpus pass through the mention kernel
+    m = (
+        get_mention_arrays(spark, sf_dir, langs)
+        .select("doc_id", F.explode_outer("curies").alias("curie"))
+        .filter(F.col("curie").isNotNull())
+        .coalesce(_artifact_partitions(spark, sf_dir))
+        .persist()
+    )
+    m.count()
+    return m
 
 
+@session_artifact
 def get_mention_arrays(spark: SparkSession, sf_dir: str,
                        langs: tuple[str, ...] | None = None) -> DataFrame:
     """Materialized (doc_id, curies:array<string>) projection — the compact
     per-document mention set that row-local pair expansion reads from."""
-    key = (*table_source_key(spark, sf_dir), langs)
-    if key not in _ARRAY_CACHE:
-        pm = (
-            pages_with_mentions(spark, sf_dir, langs)
-            .select("doc_id", "curies")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        pm.count()  # mention kernel runs at full ingest width
-        # compact the artifact AFTER materialization (r7): the cached
-        # frame kept the 32-partition ingest width and every consumer
-        # scan paid a task per near-empty partition (the incremental
-        # family alone scans it 4×/query). The coalesce target derives
-        # from input size (no-op at scale); eager localCheckpoint makes
-        # the compact copy a leaf so dropping the wide original can
-        # never re-trigger the kernel at the narrow width. The divisor
-        # is 16× finer than the node/edge artifacts' because consumers
-        # run the interpreted pair-expansion HOF over each row (~100
-        # steps/doc) — at 8 MB/partition the sf1 expansion serialized
-        # onto 2 tasks and the incremental family tripled (measured).
-        from ..sources.corpus import _scan_layout
-
-        _, nbytes = _scan_layout(spark, sf_dir)
-        compact = (
-            pm.coalesce(max(2, nbytes // (512 << 10)))
-            .localCheckpoint(eager=True)
-        )
-        pm.unpersist()
-        _ARRAY_CACHE[key] = compact
-    return _ARRAY_CACHE[key]
+    pm = (
+        pages_with_mentions(spark, sf_dir, langs)
+        .select("doc_id", "curies")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    pm.count()  # mention kernel runs at full ingest width
+    # compact the artifact AFTER materialization (r7): the cached
+    # frame kept the 32-partition ingest width and every consumer
+    # scan paid a task per near-empty partition (the incremental
+    # family alone scans it 4×/query). The coalesce target derives
+    # from input size (no-op at scale); eager localCheckpoint makes
+    # the compact copy a leaf so dropping the wide original can
+    # never re-trigger the kernel at the narrow width. The divisor
+    # is 16× finer than the node/edge artifacts' because consumers
+    # run the interpreted pair-expansion HOF over each row (~100
+    # steps/doc) — at 8 MB/partition the sf1 expansion serialized
+    # onto 2 tasks and the incremental family tripled (measured).
+    _, nbytes = _scan_layout(spark, sf_dir, "documents")
+    compact = (
+        pm.coalesce(max(2, (nbytes or 0) // (512 << 10)))
+        .localCheckpoint(eager=True)
+    )
+    pm.unpersist()
+    return compact

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
-from ..sources.corpus import read_table, register_session_cache, table_source_key
+from ..sources.corpus import read_table, session_artifact
 from .pipeline import (
     get_kg,
     get_mention_arrays,
@@ -82,10 +82,7 @@ def _undirected(cooc: DataFrame) -> DataFrame:
     )
 
 
-_DEG_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-_UND_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of the co-occurrence edge list, hash-partitioned
     on ``subject`` and persisted once per (application, source, input).
@@ -102,23 +99,21 @@ def _und_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBys reuse outright (guide §2.4: establish the partitioning
     once). The frame is the dictionary-bounded pair set — KB-to-GB at
     any scale, never corpus-sized."""
-    key = (*table_source_key(spark, sf_dir), "und_cooc")
-    if key not in _UND_CACHE:
-        _, edges = get_kg(spark, sf_dir)
-        und = (
-            _undirected(
-                edges.filter(
-                    F.col("predicate") == "biolink:correlated_with"
-                )
+    _, edges = get_kg(spark, sf_dir)
+    und = (
+        _undirected(
+            edges.filter(
+                F.col("predicate") == "biolink:correlated_with"
             )
-            .repartition(F.col("subject"))
-            .persist()
         )
-        und.count()
-        _UND_CACHE[key] = und
-    return _UND_CACHE[key]
+        .repartition(F.col("subject"))
+        .persist()
+    )
+    und.count()
+    return und
 
 
+@session_artifact
 def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, deg) of the undirected co-occurrence graph, persisted once
     per (application, source, input) — five queries (triangles, capped
@@ -130,15 +125,12 @@ def _cooc_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set, countDistinct(object) == count(*) incident edges; the
     distinct form is used so the cache stays correct even if a
     multi-edge source is ever merged in."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _DEG_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        deg = und.groupBy(F.col("subject").alias("id")).agg(
-            F.countDistinct("object").alias("deg")
-        ).persist()
-        deg.count()
-        _DEG_CACHE[key] = deg
-    return _DEG_CACHE[key]
+    und = _und_cooc(spark, sf_dir)
+    deg = und.groupBy(F.col("subject").alias("id")).agg(
+        F.countDistinct("object").alias("deg")
+    ).persist()
+    deg.count()
+    return deg
 
 
 def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,6 +373,7 @@ def kg_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 LP_ROUNDS = 3
 
 
+@session_artifact
 def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by semi-synchronous label propagation over
     the co-occurrence graph: LP_ROUNDS rounds of "adopt the most
@@ -394,13 +387,6 @@ def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     BFS/pagerank release discipline. Bounded rounds keep the oracle an
     unrolled CTE — the convergence-loop form would follow
     components_fixpoint's localCheckpoint pattern."""
-    key = (*table_source_key(spark, sf_dir), "label_propagation")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _lp_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
-def _lp_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _und_cooc(spark, sf_dir)
     return label_propagation_frame(und, LP_ROUNDS)
 
@@ -409,7 +395,7 @@ def label_propagation_frame(und: DataFrame, rounds: int) -> DataFrame:
     """(subject, object) undirected-edge frame → (id, community) after
     ``rounds`` deterministic LP rounds; frame-parametrized for the
     community-structure pytest."""
-    # per-round localCheckpoint: see _components_build (r7)
+    # per-round localCheckpoint: see kg_components (r7)
     lbl = (
         und.select(F.col("subject").alias("id"))
         .distinct()
@@ -464,6 +450,7 @@ def _lp_sql() -> str:
 LP_FIXPOINT_UNROLL = 16  # oracle unroll depth; Spark raises past it
 
 
+@session_artifact
 def kg_label_propagation_fixpoint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -484,11 +471,7 @@ def kg_label_propagation_fixpoint(
     communities the count-argmax dominates and community structure is
     preserved (barbell pytest). Per-round localCheckpoint(eager) cuts
     lineage — the unbounded-loop discipline."""
-    key = (*table_source_key(spark, sf_dir), "label_propagation_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = label_propagation_fixpoint_frame(und)
-    return _ITER_CACHE[key]
+    return label_propagation_fixpoint_frame(_und_cooc(spark, sf_dir))
 
 
 def label_propagation_fixpoint_frame(und: DataFrame) -> DataFrame:
@@ -675,6 +658,7 @@ HAVING count(DISTINCT a.object) >= 2"""
 CC_ROUNDS = 3
 
 
+@session_artifact
 def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round hash-min connected components over the
     co-occurrence graph: after k rounds each node's label is the
@@ -686,13 +670,6 @@ def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the north-star merge deliberately AVOIDS CC for canonicalization
     (prefix-priority dedup instead) — this is the analytics-side
     component labeling, not the merge path."""
-    key = (*table_source_key(spark, sf_dir), "components")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _components_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
-def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round localCheckpoint, not persist (r7): persist keeps the
     # analyzed plan nested round over round and Catalyst re-analysis
     # dominated the bounded loop at bench scale (the same measured
@@ -722,6 +699,7 @@ def _components_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_FIXPOINT_MAX_ROUNDS = 64  # safety cap ≫ any co-occurrence diameter
 
 
+@session_artifact
 def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Convergence-loop twin of kg_components: the SAME per-round plan
     (one join + one min groupBy, per-round persist/materialize/release)
@@ -733,11 +711,7 @@ def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is min-reachable-id, which DuckDB computes as a recursive-CTE
     transitive closure — so this query keeps a full value-hash gate,
     unlike sketches."""
-    key = (*table_source_key(spark, sf_dir), "components_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = components_fixpoint_frame(und)
-    return _ITER_CACHE[key]
+    return components_fixpoint_frame(_und_cooc(spark, sf_dir))
 
 
 def components_fixpoint_frame(und: DataFrame) -> DataFrame:
@@ -840,6 +814,7 @@ KCORE_K = 2
 KCORE_ROUNDS = 3
 
 
+@session_artifact
 def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round k-core peeling (k=KCORE_K): repeatedly drop nodes
     of degree < k and the edges they carry — the densest-subgraph
@@ -851,13 +826,6 @@ def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edges to surviving endpoints) with the BFS/pagerank persist
     discipline; output is the surviving nodes with their final
     residual degree."""
-    key = (*table_source_key(spark, sf_dir), "kcore")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _kcore_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
-def _kcore_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 0 reads the shared cached adjacency (never unpersisted here
     # — it is the session-scoped artifact other queries share)
     e = _und_cooc(spark, sf_dir)
@@ -874,7 +842,7 @@ def _kcore_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(keep.withColumnRenamed("id", "object"), "object",
                   "left_semi")
             .select("subject", "object")
-            .localCheckpoint(eager=True)  # see _components_build (r7)
+            .localCheckpoint(eager=True)  # see kg_components (r7)
         )
     return e.groupBy(F.col("subject").alias("id")).agg(
         F.count("*").alias("deg")
@@ -884,6 +852,7 @@ def _kcore_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_FIXPOINT_UNROLL = 16
 
 
+@session_artifact
 def kg_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Convergence-loop twin of kg_kcore: peel degree-<k nodes until a
     round removes nothing — the true k-core at any peel depth. Same
@@ -896,11 +865,7 @@ def kg_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side RAISES if it ever needs more, so the two can never
     silently diverge (the synthetic worst case, a path peeling from
     both ends, is exercised in tests)."""
-    key = (*table_source_key(spark, sf_dir), "kcore_fixpoint")
-    if key not in _ITER_CACHE:
-        und = _und_cooc(spark, sf_dir)
-        _ITER_CACHE[key] = kcore_fixpoint_frame(und, KCORE_K)
-    return _ITER_CACHE[key]
+    return kcore_fixpoint_frame(_und_cooc(spark, sf_dir), KCORE_K)
 
 
 def kcore_fixpoint_frame(und: DataFrame, k: int) -> DataFrame:
@@ -1066,20 +1031,15 @@ def _pair_counts(pm: DataFrame) -> DataFrame:
     )
 
 
-_PAIRC_CACHE: dict[tuple, DataFrame] = register_session_cache({})
-
-
+@session_artifact
 def _cooc_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (subject, object, n_docs) pair-support table, session-cached
     (r7): co-occurrence counts, lift, the walk adjacency and the
     weighted BFS all start from this ≤|dictionary|²-row frame, and each
     re-ran the corpus-wide pair expansion + groupBy without it."""
-    key = table_source_key(spark, sf_dir)
-    if key not in _PAIRC_CACHE:
-        pc = _pair_counts(get_mention_arrays(spark, sf_dir)).persist()
-        pc.count()
-        _PAIRC_CACHE[key] = pc
-    return _PAIRC_CACHE[key]
+    pc = _pair_counts(get_mention_arrays(spark, sf_dir)).persist()
+    pc.count()
+    return pc
 
 
 def kg_cooccurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1338,6 +1298,26 @@ WALK_STEPS = 3   # transitions per walk (walk visits WALK_STEPS+1 nodes)
 WALKS_PER_NODE = 2
 
 
+@session_artifact
+def _walk_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v, idx, deg): the canonically ordered co-occurrence adjacency
+    the walk steps index into. Referenced once per unrolled step;
+    without pinning it, the corpus-scale pair expansion upstream
+    re-executes WALK_STEPS+1 times (no ReusedExchange across the step
+    joins) — so the dictionary-bounded frame is persisted once."""
+    und = _cooc_undirected(spark, sf_dir)
+    w = Window.partitionBy("u").orderBy("v")
+    a = und.select(
+        "u",
+        "v",
+        (F.row_number().over(w) - 1).alias("idx"),
+        F.count("*").over(Window.partitionBy("u")).alias("deg"),
+    ).persist()
+    a.count()
+    return a
+
+
+@session_artifact
 def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic node2vec-style walk corpus over the co-occurrence
     graph — the training-data export for graph-embedding models, made
@@ -1362,30 +1342,9 @@ def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg_walk_skipgrams immediately self-joins; without the cache the
     skip-gram query re-executed the whole unrolled step chain twice
     (once per join arm)."""
-    out_key = (*table_source_key(spark, sf_dir), "walk_corpus")
-    if out_key in _ITER_CACHE:
-        return _ITER_CACHE[out_key]
-
     from ..functions.hashing import hash_mod
 
-    # the annotated adjacency is referenced once per unrolled step;
-    # without pinning it, the corpus-scale pair expansion upstream
-    # re-executes WALK_STEPS+1 times (no ReusedExchange across the
-    # step joins) — persist the dictionary-bounded frame once, the
-    # _ITER_CACHE discipline the other iterative queries use
-    key = (*table_source_key(spark, sf_dir), "walk_adjacency")
-    if key not in _ITER_CACHE:
-        und = _cooc_undirected(spark, sf_dir)
-        w = Window.partitionBy("u").orderBy("v")
-        a = und.select(
-            "u",
-            "v",
-            (F.row_number().over(w) - 1).alias("idx"),
-            F.count("*").over(Window.partitionBy("u")).alias("deg"),
-        ).persist()
-        a.count()
-        _ITER_CACHE[key] = a
-    adj = _ITER_CACHE[key]
+    adj = _walk_adjacency(spark, sf_dir)
     starts = adj.select("u").distinct()
     frontier = starts.crossJoin(
         spark.range(WALKS_PER_NODE).select(
@@ -1428,7 +1387,6 @@ def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     out = out.persist()
     out.count()
-    _ITER_CACHE[out_key] = out
     return out
 
 
@@ -1480,30 +1438,9 @@ def _cooc_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_ROUNDS = 3
 
-# final frames of the iterative queries, persisted once per
-# (application, source, input, query) — the get_kg keyed-cache pattern.
-# The loop bodies already unpersist superseded rounds; this bounds the
-# one frame that outlives the loop, so check sweeps that re-invoke
-# these queries reuse the result instead of pinning a fresh copy each
-# time (the cache-accumulation hazard ADVICE r2 flagged).
-# TIMING CAVEAT: a second in-process invocation is a cache hit (~0 s).
-# bench.py times each query exactly once per fresh process, so its
-# numbers are true build timings; any harness that loops the suite
-# in one application must use fresh processes per iteration (as
-# tools/scaling.py does) or its iterative-query timings measure a
-# dict lookup.
-_ITER_CACHE: dict[tuple, DataFrame] = register_session_cache({})
 
-
+@session_artifact
 def kg_hub_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _hub_distances_build."""
-    key = (*table_source_key(spark, sf_dir), "hub_distances")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _hub_distances_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
-def _hub_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS shortest-path lengths from the hub over the co-occurrence
     graph, bounded to BFS_ROUNDS hops — the iterative-traversal
     counterpart of kg_pagerank (same per-round persist discipline, same
@@ -1511,7 +1448,7 @@ def _hub_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge. Each round is one join on the frontier key + one min
     groupBy; unreached nodes are absent (no infinity sentinel)."""
     und = _und_cooc(spark, sf_dir)
-    # per-round localCheckpoint: see _components_build (r7)
+    # per-round localCheckpoint: see kg_components (r7)
     dist = (
         und.select(F.col("subject").alias("id"))
         .distinct()
@@ -1558,15 +1495,8 @@ def _bfs_sql() -> str:
     return ",\n".join(parts) + f"\nSELECT id, dist FROM d{BFS_ROUNDS}"
 
 
+@session_artifact
 def kg_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _weighted_distances_build."""
-    key = (*table_source_key(spark, sf_dir), "weighted_distances")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _weighted_distances_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
-def _weighted_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-hop WEIGHTED shortest paths from the hub — the min-plus
     twin of kg_hub_distances. Edge cost is 1_000_000 div n_docs over
     the co-occurrence support counts (strong associations are cheap to
@@ -1589,7 +1519,7 @@ def _weighted_distances_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w",
         )
     )
-    # per-round localCheckpoint: see _components_build (r7)
+    # per-round localCheckpoint: see kg_components (r7)
     dist = (
         und.select(F.col("subject").alias("id"))
         .distinct()
@@ -1800,6 +1730,7 @@ KTRUSS_K = 4
 KTRUSS_FIXPOINT_UNROLL = 12
 
 
+@session_artifact
 def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-TRUSS decomposition at k=KTRUSS_K: iteratively delete every
     edge in fewer than k−2 triangles until none remains to delete —
@@ -1814,14 +1745,11 @@ def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side RAISES if it ever needs more — the two can never
     silently diverge (the adversarial case, a triangle strip that
     unravels one triangle per round, is exercised in tests)."""
-    key = (*table_source_key(spark, sf_dir), "ktruss_fixpoint")
-    if key not in _ITER_CACHE:
-        _, edges = get_kg(spark, sf_dir)
-        e = edges.filter(
-            F.col("predicate") == "biolink:correlated_with"
-        ).select("subject", "object")
-        _ITER_CACHE[key] = ktruss_fixpoint_frame(e, KTRUSS_K)
-    return _ITER_CACHE[key]
+    _, edges = get_kg(spark, sf_dir)
+    e = edges.filter(
+        F.col("predicate") == "biolink:correlated_with"
+    ).select("subject", "object")
+    return ktruss_fixpoint_frame(e, KTRUSS_K)
 
 
 def ktruss_fixpoint_frame(e: DataFrame, k: int) -> DataFrame:
@@ -2225,14 +2153,6 @@ PR_DAMP_PPM = 850_000
 _PPM = 1_000_000
 
 
-def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached wrapper — see _pagerank_build."""
-    key = (*table_source_key(spark, sf_dir), "pagerank")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _pagerank_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
 def _rank_update_expr(s_col: str = "s") -> str:
     """The damped rank update ``base + (damp * s) div ppm`` with the
     multiply WIDENED to DECIMAL(38,0): in int64 ``PR_DAMP_PPM * s``
@@ -2253,7 +2173,8 @@ def _rank_update_expr(s_col: str = "s") -> str:
     )
 
 
-def _pagerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_artifact
+def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity importance over the co-occurrence graph: PR_ITERS rounds
     of damped degree-normalized message passing (PageRank power
     iteration) — the engine's iterative-algorithm surface.
@@ -2303,22 +2224,6 @@ def _pagerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPR_SEED_PREFIXES = ("CHEBI:", "DrugCentral:")  # chemical/drug nodes
 
 
-def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSONALIZED PageRank: restart mass confined to a seed set (the
-    chemical/drug nodes) — the drug-centric importance ranking a
-    repurposing consumer of this KG actually asks for, and the standard
-    PPR formulation (teleport to seeds, not uniformly). Same
-    integer-ppm / DECIMAL(38,0) machinery and per-round persist
-    discipline as kg_pagerank, so the result is bit-identical at any
-    parallelism and in the unrolled-CTE oracle; only the base vector
-    differs: seeds restart with PR_BASE_PPM, everything else restarts
-    with 0, and the initial mass sits on the seeds."""
-    key = (*table_source_key(spark, sf_dir), "pagerank_personalized")
-    if key not in _ITER_CACHE:
-        _ITER_CACHE[key] = _ppr_build(spark, sf_dir)
-    return _ITER_CACHE[key]
-
-
 def _ppr_update_expr(s_col: str = "s") -> str:
     damp = (
         f"CAST(floor((CAST({PR_DAMP_PPM} AS DECIMAL(38,0)) * "
@@ -2330,13 +2235,23 @@ def _ppr_update_expr(s_col: str = "s") -> str:
     )
 
 
-def _ppr_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_artifact
+def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PERSONALIZED PageRank: restart mass confined to a seed set (the
+    chemical/drug nodes) — the drug-centric importance ranking a
+    repurposing consumer of this KG actually asks for, and the standard
+    PPR formulation (teleport to seeds, not uniformly). Same
+    integer-ppm / DECIMAL(38,0) machinery and per-round persist
+    discipline as kg_pagerank, so the result is bit-identical at any
+    parallelism and in the unrolled-CTE oracle; only the base vector
+    differs: seeds restart with PR_BASE_PPM, everything else restarts
+    with 0, and the initial mass sits on the seeds."""
     und = _und_cooc(spark, sf_dir)
     seed_pred = None
     for p in PPR_SEED_PREFIXES:
         term = F.col("id").startswith(p)
         seed_pred = term if seed_pred is None else (seed_pred | term)
-    # localCheckpoint discipline: see _pagerank_build (r7)
+    # localCheckpoint discipline: see kg_pagerank (r7)
     deg = (
         und.groupBy(F.col("subject").alias("id"))
         .agg(F.count("*").alias("deg"))

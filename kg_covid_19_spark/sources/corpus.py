@@ -9,7 +9,10 @@ either way — both sources expose partition columns to Catalyst).
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,12 +26,12 @@ TABLES = (
 
 
 def table_source_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Cache key for session-level persisted frames derived from the
-    driver tables: (applicationId, RESOLVED SOURCE, sf_dir). The source
-    component matters because read_table's resolution depends on the
-    mutable session conf ``spark.kg.catalog`` — a keyed cache that
-    ignored it would serve frames built from the wrong source after a
-    mid-session catalog toggle (as tests/test_provider.py performs)."""
+    """Key prefix of every session artifact (see session_artifact):
+    (applicationId, RESOLVED SOURCE, sf_dir). The source component
+    matters because read_table's resolution depends on the mutable
+    session conf ``spark.kg.catalog`` — a key that ignored it would
+    serve frames built from the wrong source after a mid-session
+    catalog toggle (as tests/test_provider.py performs)."""
     try:
         catalog = spark.conf.get("spark.kg.catalog", "") or ""
     except Exception:
@@ -36,20 +39,49 @@ def table_source_key(spark: SparkSession, sf_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, catalog, sf_dir)
 
 
-#: every session-level cache dict keyed by table_source_key (possibly with
-#: extra suffix components) registers itself here so a table REWRITE in the
-#: same session can evict the now-stale persisted frames instead of serving
-#: them for the application lifetime. TableProvider.write calls
-#: invalidate_session_caches after every successful write.
-_SESSION_CACHES: list[dict] = []
+#: every session artifact, keyed (applicationId, catalog, sf_dir, builder,
+#: args). TableProvider.write calls invalidate_session_caches after every
+#: successful write so a table REWRITE in the same session evicts the
+#: now-stale persisted frames instead of serving them for the application
+#: lifetime.
+_SESSION_ARTIFACTS: dict[tuple, object] = {}
 
 
-def register_session_cache(cache: dict) -> dict:
-    """Declare ``cache`` (a dict whose keys start with table_source_key's
-    (applicationId, catalog, sf_dir) triple) as derived from driver
-    tables; returns it for inline use at module scope."""
-    _SESSION_CACHES.append(cache)
-    return cache
+def session_artifact(fn):
+    """Memoize a builder ``fn(spark, sf_dir, *args)`` once per
+    (application, resolved source, sf_dir, builder, args) — the one
+    materialization point for artifacts derived from the driver tables
+    (merged graph, mention arrays, shingles, LSH candidates, iteration
+    results). The builder decides how its result is materialized
+    (persist, storage level, eager count, localCheckpoint, coalesce);
+    the memo only keys, stores and evicts it. Arguments are bound
+    against the builder's signature with defaults applied, so
+    ``get_kg(s, d)``, ``get_kg(s, d, None)`` and
+    ``get_kg(s, d, langs=None)`` hit one entry; they must be hashable.
+
+    TIMING CAVEAT: a second in-process call is a cache hit (~0 s).
+    bench.py times each query exactly once per fresh process, so its
+    numbers are true build timings; any harness that loops the suite
+    in one application must call invalidate_session_caches between
+    iterations or use fresh processes (as tools/scaling.py does), or
+    its timings of memoized queries measure a dict lookup."""
+    sig = inspect.signature(fn)
+    name = f"{fn.__module__}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def memo(spark: SparkSession, sf_dir: str, *args, **kwargs):
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        key = (
+            *table_source_key(spark, sf_dir),
+            name,
+            tuple(bound.arguments.values())[2:],
+        )
+        if key not in _SESSION_ARTIFACTS:
+            _SESSION_ARTIFACTS[key] = fn(spark, sf_dir, *args, **kwargs)
+        return _SESSION_ARTIFACTS[key]
+
+    return memo
 
 
 def _unpersist_value(val) -> None:
@@ -64,19 +96,16 @@ def _unpersist_value(val) -> None:
 
 
 def invalidate_session_caches(spark: SparkSession) -> int:
-    """Evict (and unpersist) every registered cache entry belonging to
-    this application. Called by TableProvider.write; conservative
-    (all sources, all sf_dirs for the app) because a catalog-mode write
+    """Evict (and unpersist) every session artifact belonging to this
+    application. Called by TableProvider.write; conservative (all
+    sources, all sf_dirs for the app) because a catalog-mode write
     changes what any read_table resolution may return and writes are
     rare relative to reads. Returns the number of evicted entries."""
     app = spark.sparkContext.applicationId
-    n = 0
-    for cache in _SESSION_CACHES:
-        for key in list(cache):
-            if isinstance(key, tuple) and key and key[0] == app:
-                _unpersist_value(cache.pop(key))
-                n += 1
-    return n
+    stale = [key for key in _SESSION_ARTIFACTS if key[0] == app]
+    for key in stale:
+        _unpersist_value(_SESSION_ARTIFACTS.pop(key))
+    return len(stale)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,50 +120,51 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return TableProvider(spark, sf_dir).read(name)
 
 
-# sf_dir → (scan split count, raw bytes), memoized: the .rdd conversion
-# previously used to probe splits costs ~1s of driver time per call, and
-# the answer is static per input.
-_SCAN_LAYOUT: dict[str, tuple[int, int]] = {}
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
 
 
-def _scan_layout(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """(estimated scan splits, total file bytes) for the documents table.
+def _parse_bytes(value: str) -> int:
+    """A Spark byte-string conf value in bytes: ``134217728``, ``128m``,
+    ``128MB``, ``1g`` (case-insensitive; a bare number is bytes)."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", value, re.IGNORECASE)
+    if m is None:
+        raise ValueError(f"not a byte string: {value!r}")
+    return int(m[1]) * _BYTE_UNITS[m[2].lower()]
+
+
+@session_artifact
+def _scan_layout(spark: SparkSession, sf_dir: str,
+                 table: str) -> tuple[int, int | None]:
+    """(estimated scan splits, total file bytes) for ``table``; bytes is
+    None when the size is unknown.
 
     r7: splits are estimated from file sizes with the scan-packing
     formula (maxPartitionBytes + openCostInBytes per file, guide §6)
     instead of a .rdd conversion — the conversion costs ~1 s of driver
     time and it landed inside the timed KG build. Falls back to the
     exact probe for non-path sources."""
-    cached = _SCAN_LAYOUT.get(sf_dir)
-    if cached is None:
-        path = f"{sf_dir}/documents.parquet"
-        try:
-            sizes = [
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ] if os.path.isdir(path) else [os.path.getsize(path)]
-            max_bytes = int(
-                spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-                .rstrip("b")
-            )
-            open_cost = 4 * 1024 * 1024
-            total = sum(s + open_cost for s in sizes)
-            cached = (max(1, -(-total // max_bytes)), sum(sizes))
-        except (OSError, ValueError):
-            n = spark.read.parquet(path).rdd.getNumPartitions()
-            cached = (n, 0)
-        _SCAN_LAYOUT[sf_dir] = cached
-    return cached
-
-
-def _scan_partitions(spark: SparkSession, sf_dir: str) -> int:
-    return _scan_layout(spark, sf_dir)[0]
+    path = f"{sf_dir}/{table}.parquet"
+    try:
+        sizes = [
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        ] if os.path.isdir(path) else [os.path.getsize(path)]
+        max_bytes = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        )
+        open_cost = 4 * 1024 * 1024
+        total = sum(s + open_cost for s in sizes)
+        return (max(1, -(-total // max_bytes)), sum(sizes))
+    except (OSError, ValueError):
+        return (spark.read.parquet(path).rdd.getNumPartitions(), None)
 
 
 def ensure_min_parallelism(spark: SparkSession, sf_dir: str,
-                           df: DataFrame, min_bytes: int = 0) -> DataFrame:
-    """web_pages' min-parallelism policy, shared: when the documents scan
+                           df: DataFrame, min_bytes: int = 0,
+                           table: str = "documents") -> DataFrame:
+    """web_pages' min-parallelism policy, shared: when the ``table`` scan
     has fewer splits than the default parallelism, round-robin the frame
     up to it so downstream Arrow kernels / expression chains use every
     core instead of serializing onto one or two scan tasks (guide §2.6 /
@@ -150,10 +180,11 @@ def ensure_min_parallelism(spark: SparkSession, sf_dir: str,
     exchange only fires when there is enough data to amortize it —
     measured on media_grid_neardup: the lift is −1.8 s at a 0.6 MB input
     and +6..10 s of win at 12 MB. Heavy-per-byte kernels (shingling)
-    keep the default 0 (always lift when under-split)."""
-    splits, nbytes = _scan_layout(spark, sf_dir)
+    keep the default 0 (always lift when under-split). An input of
+    unknown size passes the gate."""
+    splits, nbytes = _scan_layout(spark, sf_dir, table)
     target = spark.sparkContext.defaultParallelism
-    if splits < target and nbytes >= min_bytes:
+    if splits < target and (nbytes is None or nbytes >= min_bytes):
         return df.repartition(target)
     return df
 
@@ -177,9 +208,7 @@ def web_pages(spark: SparkSession, sf_dir: str,
     docs = read_table(spark, sf_dir, "documents")
     if langs:
         docs = docs.filter(F.col("lang").isin(list(langs)))
-    target = spark.sparkContext.defaultParallelism
-    if _scan_partitions(spark, sf_dir) < target:
-        docs = docs.repartition(target)
+    docs = ensure_min_parallelism(spark, sf_dir, docs)
     return docs.select(
         F.concat(F.lit("https://example.org/doc/"), F.col("doc_id").cast("string"))
         .alias("url"),

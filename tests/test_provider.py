@@ -131,27 +131,34 @@ def test_catalog_rewrite_swaps_and_leaves_no_auxiliary_tables(spark, pages):
 
 
 def test_write_invalidates_session_caches(spark, tmp_path, pages):
-    """A provider write evicts (and unpersists) registered session-cache
-    entries for this application — stale persisted frames must not be
-    served after an in-session table rewrite (ADVICE r3)."""
-    from kg_covid_19_spark.sources.corpus import (
-        register_session_cache,
-        table_source_key,
-    )
+    """A provider write evicts (and unpersists) this application's
+    session artifacts — stale persisted frames must not be served after
+    an in-session table rewrite (ADVICE r3)."""
+    from kg_covid_19_spark.sources import corpus
 
-    cache = register_session_cache({})
-    frame = pages.persist()
-    frame.count()
-    cache[table_source_key(spark, str(tmp_path))] = frame
-    other_app = ("not-this-app", "", str(tmp_path))
-    cache[other_app] = "kept"
+    @corpus.session_artifact
+    def pinned(spark, sf_dir):
+        frame = pages.select("*").persist()
+        frame.count()
+        return frame
 
-    prov = TableProvider(spark, str(tmp_path))
-    prov.write(pages, "inval_probe")
+    sf_dir = str(tmp_path)
+    frame = pinned(spark, sf_dir)
+    assert pinned(spark, sf_dir) is frame  # memoized
+    other_app = ("not-this-app", "", sf_dir, "pinned", ())
+    corpus._SESSION_ARTIFACTS[other_app] = "kept"
+    try:
+        prov = TableProvider(spark, sf_dir)
+        prov.write(pages, "inval_probe")
 
-    assert table_source_key(spark, str(tmp_path)) not in cache
-    assert frame.storageLevel.useMemory is False  # unpersisted
-    assert cache[other_app] == "kept"  # other applications untouched
+        assert frame.storageLevel.useMemory is False  # unpersisted
+        # other applications untouched
+        assert corpus._SESSION_ARTIFACTS[other_app] == "kept"
+        rebuilt = pinned(spark, sf_dir)
+        assert rebuilt is not frame  # evicted, so the next call rebuilds
+        rebuilt.unpersist()
+    finally:
+        corpus._SESSION_ARTIFACTS.pop(other_app, None)
 
 
 def test_catalog_write_recovers_orphaned_old_copy(spark, pages):
