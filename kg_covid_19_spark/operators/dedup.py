@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import hash_min_labels
 from ..sources.corpus import (
     ensure_min_parallelism,
     read_table,
@@ -414,43 +415,28 @@ CLUSTER_ROUNDS = 3
 def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DELIVERABLE the pair list feeds: near-duplicate
     CLUSTERS with a canonical survivor per cluster — hash-min label
-    propagation (the kg_components plan) over the verified Jaccard
-    pair graph, CLUSTER_ROUNDS bounded rounds (near-dup components are
-    short chains; production iterates the same per-round plan to
-    fixpoint). Output: every clustered doc with its cluster label
-    (= min doc_id in its component) and an is_survivor flag — filter
-    survivors ∪ unclustered docs to materialize the deduped corpus.
-    Deterministic: min over integer ids, no RNG."""
-    pairs = neardup_pairs(spark, sf_dir).select("a", "b")
-    # localCheckpoint, not persist (r7): a persisted frame still nests
-    # the whole candidate-join + Jaccard-verify ANALYZED plan, and each
-    # round re-nests it — Catalyst re-analysis grew the per-round wall
-    # 2.6s → 4.8s → 12.2s at sf0.01 (measured). Eager localCheckpoint
-    # materializes AND cuts the plan to a leaf, the discipline the
-    # unbounded fixpoint loops in plans/queries.py already use.
-    und = pairs.unionAll(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    lbl = (
-        und.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+    propagation (plans.iterate.hash_min_labels, the kg_components plan)
+    over the verified Jaccard pair graph, CLUSTER_ROUNDS bounded rounds
+    (near-dup components are short chains). Output: every clustered
+    doc with its cluster label (= min doc_id in its component) and an
+    is_survivor flag — filter survivors ∪ unclustered docs to
+    materialize the deduped corpus. Deterministic: min over integer
+    ids, no RNG."""
+    pairs = neardup_pairs(spark, sf_dir).select(
+        F.col("a").alias("subject"), F.col("b").alias("object")
     )
-    for _ in range(CLUSTER_ROUNDS):
-        nbr = und.join(lbl, und.b == lbl.doc_id).select(
-            und.a.alias("doc_id"), "lbl"
-        )
-        lbl = (
-            lbl.unionByName(nbr)
-            .groupBy("doc_id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
+    # joined every round: checkpointed (not persisted) so the rounds
+    # do not re-analyze the candidate-join + Jaccard-verify plan, for
+    # the reason plans.iterate.iterate gives
+    und = pairs.unionAll(
+        pairs.select(F.col("object").alias("subject"),
+                     F.col("subject").alias("object"))
+    ).localCheckpoint(eager=True)
+    lbl = hash_min_labels(und, CLUSTER_ROUNDS)
     return lbl.select(
-        "doc_id",
+        F.col("id").alias("doc_id"),
         F.col("lbl").alias("cluster"),
-        (F.col("doc_id") == F.col("lbl")).alias("is_survivor"),
+        (F.col("id") == F.col("lbl")).alias("is_survivor"),
     )
 
 

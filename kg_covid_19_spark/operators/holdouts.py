@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..sources.corpus import session_artifact
 from ..functions.hashing import hash_mod_sql as _hash_mod_sql
+from ..plans.iterate import iterate, unchanged
 from ..plans.merged import get_merged
 
 N_NEG = 100
@@ -119,8 +120,8 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
        reachable node id, so the component ROOT is the node equal to
        its own label);
     2. multi-source BFS distances by min-relaxation from all roots at
-       once (localCheckpoint per round, changed==0 termination,
-       raise past FOREST_BFS_UNROLL — the fixpoint discipline);
+       once (plans.iterate to fixpoint, raising past
+       FOREST_BFS_UNROLL);
     3. every non-root picks its minimum-hash edge to a neighbor one
        level closer to the root. Parent edges strictly decrease the
        level, so the picked set is acyclic, has exactly
@@ -142,16 +143,7 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
     )
     from ..plans.queries import components_fixpoint_frame
 
-    comp = components_fixpoint_frame(
-        und.select(F.col("a").alias("subject"), F.col("b").alias("object"))
-    )
-    dist = comp.select(
-        "id",
-        F.when(F.col("id") == F.col("component"), F.lit(0))
-        .cast("int")
-        .alias("d"),
-    ).localCheckpoint(eager=True)
-    for _ in range(FOREST_BFS_UNROLL):
+    def relax(dist: DataFrame) -> DataFrame:
         nbr = (
             und.join(dist, und.b == dist.id)
             .filter(F.col("d").isNotNull())
@@ -161,48 +153,41 @@ def spanning_forest_hashes(edges_h: DataFrame) -> DataFrame:
         )
         # explicit null-aware min (identical CASE runs in the oracle —
         # engines differ on whether least() ignores NULLs)
-        new = (
-            dist.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.when(F.col("d").isNull(), F.col("nd"))
-                .when(F.col("nd").isNull(), F.col("d"))
-                .when(F.col("nd") < F.col("d"), F.col("nd"))
-                .otherwise(F.col("d"))
-                .alias("d"),
-            )
-            .localCheckpoint(eager=True)
+        return dist.join(nbr, "id", "left").select(
+            "id",
+            F.when(F.col("d").isNull(), F.col("nd"))
+            .when(F.col("nd").isNull(), F.col("d"))
+            .when(F.col("nd") < F.col("d"), F.col("nd"))
+            .otherwise(F.col("d"))
+            .alias("d"),
         )
-        changed = (
-            new.join(
-                dist.withColumnRenamed("d", "old"), "id"
-            )
-            .filter(~F.col("d").eqNullSafe(F.col("old")))
-            .count()
+
+    try:
+        comp = components_fixpoint_frame(
+            und.select(F.col("a").alias("subject"),
+                       F.col("b").alias("object"))
         )
-        dist = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"multi-source BFS did not converge within "
-            f"{FOREST_BFS_UNROLL} rounds — raise FOREST_BFS_UNROLL "
-            f"(and the oracle unroll with it)"
+        roots = comp.select(
+            "id",
+            F.when(F.col("id") == F.col("component"), F.lit(0))
+            .cast("int")
+            .alias("d"),
         )
-    da = dist.select(F.col("id").alias("a"), F.col("d").alias("da"))
-    db = dist.select(F.col("id").alias("b"), F.col("d").alias("db"))
-    forest = (
-        und.join(da, "a")
-        .join(db, "b")
-        .filter(F.col("da") == F.col("db") + 1)
-        .groupBy("a")
-        .agg(F.min("h").alias("h"))
-        .select("h")
-        .distinct()
-    )
-    out = forest.localCheckpoint(eager=True)
-    und.unpersist()
-    return out
+        dist = iterate(roots, relax, FOREST_BFS_UNROLL, unchanged("id", "d"))
+        da = dist.select(F.col("id").alias("a"), F.col("d").alias("da"))
+        db = dist.select(F.col("id").alias("b"), F.col("d").alias("db"))
+        forest = (
+            und.join(da, "a")
+            .join(db, "b")
+            .filter(F.col("da") == F.col("db") + 1)
+            .groupBy("a")
+            .agg(F.min("h").alias("h"))
+            .select("h")
+            .distinct()
+        )
+        return forest.localCheckpoint(eager=True)
+    finally:
+        und.unpersist()
 
 
 def forest_edge_splits(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import hash_min_labels
 from ..sources.corpus import (
     ensure_min_parallelism,
     read_table,
@@ -444,36 +445,20 @@ def emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag. Deterministic: min over integer ids; the pair graph itself
     is the already-parity-checked emb_cosine_neardup output."""
     pairs = emb_cosine_neardup(spark, sf_dir).select("id_a", "id_b")
-    # eager localCheckpoint, not persist (r7): materializes the bucket
-    # self-join + cosine verify once for the initial distinct and every
-    # propagation round AND truncates the analyzed plan, so round k's
-    # Catalyst analysis no longer re-nests earlier rounds (the measured
-    # growing-round-wall effect in the doc cluster loop)
+    # joined every round: checkpointed (not persisted) so the rounds
+    # do not re-analyze the bucket self-join + cosine verify plan, for
+    # the reason plans.iterate.iterate gives
     und = pairs.select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        F.col("id_a").alias("subject"), F.col("id_b").alias("object")
     ).unionAll(
-        pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))
+        pairs.select(F.col("id_b").alias("subject"),
+                     F.col("id_a").alias("object"))
     ).localCheckpoint(eager=True)
-    lbl = (
-        und.select(F.col("a").alias("vec_id"))
-        .distinct()
-        .withColumn("lbl", F.col("vec_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(EMB_CLUSTER_ROUNDS):
-        nbr = und.join(lbl, und.b == lbl.vec_id).select(
-            und.a.alias("vec_id"), "lbl"
-        )
-        lbl = (
-            lbl.unionByName(nbr)
-            .groupBy("vec_id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
+    lbl = hash_min_labels(und, EMB_CLUSTER_ROUNDS)
     return lbl.select(
-        "vec_id",
+        F.col("id").alias("vec_id"),
         F.col("lbl").alias("cluster"),
-        (F.col("vec_id") == F.col("lbl")).alias("is_survivor"),
+        (F.col("id") == F.col("lbl")).alias("is_survivor"),
     )
 
 

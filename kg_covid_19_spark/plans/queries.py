@@ -20,11 +20,12 @@ Mapping (SURVEY.md §2.3 J11-J13, §2.4 A7):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..dictionaries import kg_cte_sql, normalized_gazetteer
 from ..sources.corpus import read_table, session_artifact
+from .iterate import hash_min_labels, iterate, own_labels, unchanged
 from .pipeline import (
     get_kg,
     get_mention_arrays,
@@ -383,42 +384,42 @@ def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a total order, the same discipline as the hash-min CC twin. Each
     round is one copartitioned join + two bounded groupBys (label
     counts collapse map-side; the argmax is a partial-agg min over a
-    (−count, label) struct, not a window); per-round persist with the
-    BFS/pagerank release discipline. Bounded rounds keep the oracle an
-    unrolled CTE — the convergence-loop form would follow
-    components_fixpoint's localCheckpoint pattern."""
+    (−count, label) struct, not a window), run by plans.iterate.
+    Bounded rounds keep the oracle an unrolled CTE; the convergence
+    twin is kg_label_propagation_fixpoint."""
     und = _und_cooc(spark, sf_dir)
     return label_propagation_frame(und, LP_ROUNDS)
+
+
+def _best_neighbour_label(und: DataFrame, lbl: DataFrame) -> DataFrame:
+    """(id, best): each node's most frequent neighbour label, ties
+    broken to the smallest label — the argmax both LP variants share."""
+    return (
+        und.join(lbl, und.object == lbl.id)
+        .select(und.subject.alias("id"), "lbl")
+        .groupBy("id", "lbl")
+        .agg(F.count("*").alias("c"))
+        .groupBy("id")
+        .agg(
+            F.min(
+                F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("l"))
+            ).alias("b")
+        )
+        .select("id", F.col("b.l").alias("best"))
+    )
 
 
 def label_propagation_frame(und: DataFrame, rounds: int) -> DataFrame:
     """(subject, object) undirected-edge frame → (id, community) after
     ``rounds`` deterministic LP rounds; frame-parametrized for the
     community-structure pytest."""
-    # per-round localCheckpoint: see kg_components (r7)
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        msgs = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
+
+    def step(lbl: DataFrame) -> DataFrame:
+        return _best_neighbour_label(und, lbl).withColumnRenamed(
+            "best", "lbl"
         )
-        cnt = msgs.groupBy("id", "lbl").agg(F.count("*").alias("c"))
-        lbl = (
-            cnt.groupBy("id")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"),
-                             F.col("lbl").alias("l"))
-                ).alias("b")
-            )
-            .select("id", F.col("b.l").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
+
+    lbl = iterate(own_labels(und), step, rounds)
     return lbl.select("id", F.col("lbl").alias("community"))
 
 
@@ -469,54 +470,22 @@ def kg_label_propagation_fixpoint(
     kcore_fixpoint discipline, never silent divergence). On degree-≤2
     stretches the rule degenerates to hash-min CC; inside dense
     communities the count-argmax dominates and community structure is
-    preserved (barbell pytest). Per-round localCheckpoint(eager) cuts
-    lineage — the unbounded-loop discipline."""
+    preserved (barbell pytest)."""
     return label_propagation_fixpoint_frame(_und_cooc(spark, sf_dir))
 
 
 def label_propagation_fixpoint_frame(und: DataFrame) -> DataFrame:
-    und = und.persist()  # loop-invariant: joined every round
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
+    """Monotone LP to fixpoint over a cached (subject, object) frame
+    (joined every round); raises past LP_FIXPOINT_UNROLL rounds."""
+
+    def step(lbl: DataFrame) -> DataFrame:
+        return lbl.join(_best_neighbour_label(und, lbl), "id").select(
+            "id", F.least("lbl", "best").alias("lbl")
+        )
+
+    lbl = iterate(
+        own_labels(und), step, LP_FIXPOINT_UNROLL, unchanged("id", "lbl")
     )
-    for _ in range(LP_FIXPOINT_UNROLL):
-        best = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-            .groupBy("id", "lbl")
-            .agg(F.count("*").alias("c"))
-            .groupBy("id")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"),
-                             F.col("lbl").alias("l"))
-                ).alias("b")
-            )
-            .select("id", F.col("b.l").alias("best"))
-        )
-        new = (
-            lbl.join(best, "id")
-            .select("id", F.least("lbl", "best").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.join(lbl.withColumnRenamed("lbl", "old"), "id")
-            .filter(F.col("lbl") != F.col("old"))
-            .count()
-        )
-        lbl = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"monotone label propagation did not converge within "
-            f"{LP_FIXPOINT_UNROLL} rounds — raise LP_FIXPOINT_UNROLL "
-            f"(and the oracle unroll with it)"
-        )
-    und.unpersist()
     return lbl.select("id", F.col("lbl").alias("community"))
 
 
@@ -663,36 +632,14 @@ def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round hash-min connected components over the
     co-occurrence graph: after k rounds each node's label is the
     minimum entity id within its k-hop ball — the distributed CC
-    primitive (one join + one min groupBy per round, the BFS persist
-    discipline). Fixed CC_ROUNDS keeps the result deterministic and
-    oracle-expressible (unrolled CTEs); production convergence loops
-    until a round changes no label, with the same per-round plan. Note
+    primitive (plans.iterate.hash_min_labels: one join + one min
+    groupBy per round). Fixed CC_ROUNDS keeps the result deterministic
+    and oracle-expressible (unrolled CTEs); kg_components_fixpoint
+    runs the same per-round plan until a round changes no label. Note
     the north-star merge deliberately AVOIDS CC for canonicalization
     (prefix-priority dedup instead) — this is the analytics-side
     component labeling, not the merge path."""
-    # per-round localCheckpoint, not persist (r7): persist keeps the
-    # analyzed plan nested round over round and Catalyst re-analysis
-    # dominated the bounded loop at bench scale (the same measured
-    # effect as the dedup cluster rounds); eager localCheckpoint
-    # materializes AND flattens — the fixpoint twin's discipline.
-    und = _und_cooc(spark, sf_dir)
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(CC_ROUNDS):
-        nbr = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-        )
-        lbl = (
-            lbl.unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
+    lbl = hash_min_labels(_und_cooc(spark, sf_dir), CC_ROUNDS)
     return lbl.select("id", F.col("lbl").alias("component"))
 
 
@@ -702,66 +649,25 @@ CC_FIXPOINT_MAX_ROUNDS = 64  # safety cap ≫ any co-occurrence diameter
 @session_artifact
 def kg_components_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Convergence-loop twin of kg_components: the SAME per-round plan
-    (one join + one min groupBy, per-round persist/materialize/release)
-    iterated UNTIL NO LABEL CHANGES rather than a fixed round count —
-    the true connected components at any diameter, with a driver-side
-    changed-row count (one extra copartitioned join + count per round,
-    the standard distributed-fixpoint termination test) and a safety
-    cap. Oracle-expressible without unrolling: hash-min CC's fixpoint
-    is min-reachable-id, which DuckDB computes as a recursive-CTE
-    transitive closure — so this query keeps a full value-hash gate,
-    unlike sketches."""
+    (hash_min_labels) iterated UNTIL NO LABEL CHANGES rather than a
+    fixed round count — the true connected components at any diameter,
+    with a changed-row count per round (plans.iterate.unchanged) and
+    a safety cap. Oracle-expressible without unrolling: hash-min CC's
+    fixpoint is min-reachable-id, which DuckDB computes as a
+    recursive-CTE transitive closure — so this query keeps a full
+    value-hash gate, unlike sketches."""
     return components_fixpoint_frame(_und_cooc(spark, sf_dir))
 
 
 def components_fixpoint_frame(und: DataFrame) -> DataFrame:
     """(subject, object) undirected-edge frame → (id, component) at
     fixpoint. Frame-parametrized so the convergence pytest can drive a
-    path graph LONGER than kg_components' fixed CC_ROUNDS."""
-    und = und.persist()  # loop-invariant: joined every round
-    # Per-round LINEAGE TRUNCATION, not just persist: a persisted frame
-    # still nests the previous round's analyzed plan, and an
-    # unknown-depth loop grows that nest until Catalyst itself OOMs
-    # (observed on an 11-round path graph). localCheckpoint(eager)
-    # materializes AND cuts the plan to a leaf — the unbounded-loop
-    # discipline; a cluster deployment would use reliable checkpoint()
-    # to a DFS dir for executor-loss tolerance.
-    lbl = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=True)
+    path graph LONGER than kg_components' fixed CC_ROUNDS. The caller
+    keeps ``und`` cached; raises when the graph diameter exceeds
+    CC_FIXPOINT_MAX_ROUNDS."""
+    lbl = hash_min_labels(
+        und, CC_FIXPOINT_MAX_ROUNDS, unchanged("id", "lbl")
     )
-    for _ in range(CC_FIXPOINT_MAX_ROUNDS):
-        nbr = (
-            und.join(lbl, und.object == lbl.id)
-            .select(und.subject.alias("id"), "lbl")
-        )
-        new = (
-            lbl.unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.join(lbl.withColumnRenamed("lbl", "old"), "id")
-            .filter(F.col("lbl") != F.col("old"))
-            .count()
-        )
-        lbl = new
-        if changed == 0:
-            break
-    else:
-        # Never return a non-converged labeling: the oracle computes
-        # the true transitive-closure fixpoint, so a cap-exhausted
-        # partial result would diverge SILENTLY. Same discipline as
-        # kcore_fixpoint_frame.
-        raise RuntimeError(
-            f"hash-min components did not converge within "
-            f"{CC_FIXPOINT_MAX_ROUNDS} rounds — graph diameter "
-            f"exceeds the cap; raise CC_FIXPOINT_MAX_ROUNDS"
-        )
-    und.unpersist()
     return lbl.select("id", F.col("lbl").alias("component"))
 
 
@@ -821,32 +727,44 @@ def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive next to components and triangles (peeling removes the
     noise fringe a co-occurrence graph accumulates). KCORE_ROUNDS
     fixed rounds keep it deterministic and oracle-expressible
-    (unrolled CTEs); production iterates to fixpoint with the same
-    per-round plan. Each round is one degree groupBy + two semi-joins
-    (edges to surviving endpoints) with the BFS/pagerank persist
-    discipline; output is the surviving nodes with their final
-    residual degree."""
-    # round 0 reads the shared cached adjacency (never unpersisted here
-    # — it is the session-scoped artifact other queries share)
-    e = _und_cooc(spark, sf_dir)
-    for _ in range(KCORE_ROUNDS):
-        keep = (
-            e.groupBy(F.col("subject").alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select("id")
-        )
-        e = (
-            e.join(keep.withColumnRenamed("id", "subject"), "subject",
-                   "left_semi")
-            .join(keep.withColumnRenamed("id", "object"), "object",
-                  "left_semi")
-            .select("subject", "object")
-            .localCheckpoint(eager=True)  # see kg_components (r7)
-        )
+    (unrolled CTEs); kg_kcore_fixpoint iterates the same per-round
+    plan (_peel: one degree groupBy + two semi-joins keeping edges
+    between surviving endpoints) to fixpoint. Output is the surviving
+    nodes with their final residual degree."""
+    e = iterate(
+        _und_cooc(spark, sf_dir), lambda e: _peel(e, KCORE_K), KCORE_ROUNDS
+    )
+    return _residual_degrees(e)
+
+
+def _peel(e: DataFrame, k: int) -> DataFrame:
+    """One k-core round over a (subject, object) frame holding both
+    directions: drop every edge with an endpoint of degree < k."""
+    keep = (
+        e.groupBy(F.col("subject").alias("id"))
+        .agg(F.count("*").alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select("id")
+    )
+    return (
+        e.join(keep.withColumnRenamed("id", "subject"), "subject",
+               "left_semi")
+        .join(keep.withColumnRenamed("id", "object"), "object",
+              "left_semi")
+        .select("subject", "object")
+    )
+
+
+def _residual_degrees(e: DataFrame) -> DataFrame:
     return e.groupBy(F.col("subject").alias("id")).agg(
         F.count("*").alias("deg")
     )
+
+
+def _nothing_peeled(prev: DataFrame, new: DataFrame) -> bool:
+    """``until`` of the peeling loops: a peel only removes edges, so an
+    unchanged edge count means an unchanged edge set."""
+    return new.count() == prev.count()
 
 
 KCORE_FIXPOINT_UNROLL = 16
@@ -856,51 +774,22 @@ KCORE_FIXPOINT_UNROLL = 16
 def kg_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Convergence-loop twin of kg_kcore: peel degree-<k nodes until a
     round removes nothing — the true k-core at any peel depth. Same
-    per-round plan (degree groupBy + two semi-joins), per-round
-    localCheckpoint lineage truncation (the components_fixpoint OOM
-    lesson), edge-count-based termination. Oracle contract is EXACT,
-    not best-effort: peeling is monotone and idempotent at fixpoint,
-    so an oracle unrolled to KCORE_FIXPOINT_UNROLL rounds equals the
-    fixpoint whenever convergence takes ≤ that many rounds — and the
-    Spark side RAISES if it ever needs more, so the two can never
-    silently diverge (the synthetic worst case, a path peeling from
-    both ends, is exercised in tests)."""
+    per-round plan (_peel), edge-count-based termination. Oracle
+    contract is EXACT, not best-effort: peeling is monotone and
+    idempotent at fixpoint, so an oracle unrolled to
+    KCORE_FIXPOINT_UNROLL rounds equals the fixpoint whenever
+    convergence takes ≤ that many rounds — and the Spark side RAISES
+    if it ever needs more, so the two can never silently diverge (the
+    synthetic worst case, a path peeling from both ends, is exercised
+    in tests)."""
     return kcore_fixpoint_frame(_und_cooc(spark, sf_dir), KCORE_K)
 
 
 def kcore_fixpoint_frame(und: DataFrame, k: int) -> DataFrame:
-    e = und.localCheckpoint(eager=True)
-    n_edges = e.count()
-    for _ in range(KCORE_FIXPOINT_UNROLL):
-        if n_edges == 0:
-            break
-        keep = (
-            e.groupBy(F.col("subject").alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("id")
-        )
-        e = (
-            e.join(keep.withColumnRenamed("id", "subject"), "subject",
-                   "left_semi")
-            .join(keep.withColumnRenamed("id", "object"), "object",
-                  "left_semi")
-            .select("subject", "object")
-            .localCheckpoint(eager=True)
-        )
-        n_now = e.count()
-        if n_now == n_edges:
-            break
-        n_edges = n_now
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge within "
-            f"{KCORE_FIXPOINT_UNROLL} rounds — raise "
-            f"KCORE_FIXPOINT_UNROLL (and the oracle unroll with it)"
-        )
-    return e.groupBy(F.col("subject").alias("id")).agg(
-        F.count("*").alias("deg")
+    e = iterate(
+        und, lambda e: _peel(e, k), KCORE_FIXPOINT_UNROLL, _nothing_peeled
     )
+    return _residual_degrees(e)
 
 
 def _kcore_fixpoint_sql() -> str:
@@ -1443,34 +1332,33 @@ BFS_ROUNDS = 3
 def kg_hub_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS shortest-path lengths from the hub over the co-occurrence
     graph, bounded to BFS_ROUNDS hops — the iterative-traversal
-    counterpart of kg_pagerank (same per-round persist discipline, same
-    unrolled-CTE oracle). Integer distances only: nothing float to
-    diverge. Each round is one join on the frontier key + one min
-    groupBy; unreached nodes are absent (no infinity sentinel)."""
-    und = _und_cooc(spark, sf_dir)
-    # per-round localCheckpoint: see kg_components (r7)
-    dist = (
+    counterpart of kg_pagerank (same unrolled-CTE oracle). Integer
+    distances only: nothing float to diverge. Each round is one join
+    on the frontier key + one min groupBy; unreached nodes are absent
+    (no infinity sentinel)."""
+    return _hub_distances(_und_cooc(spark, sf_dir), F.lit(1), "int")
+
+
+def _hub_distances(und: DataFrame, w: Column, dtype: str) -> DataFrame:
+    """(id, dist): minimum total edge cost ``w`` from HUB using at most
+    BFS_ROUNDS hops over a (subject, object[, w]) frame holding both
+    directions — BFS_ROUNDS min-plus relaxation rounds."""
+
+    def relax(dist: DataFrame) -> DataFrame:
+        reached = und.join(dist, und.subject == dist.id).select(
+            F.col("object").alias("id"), (F.col("dist") + w).alias("dist")
+        )
+        return dist.unionByName(reached).groupBy("id").agg(
+            F.min("dist").alias("dist")
+        )
+
+    hub = (
         und.select(F.col("subject").alias("id"))
         .distinct()
         .filter(F.col("id") == HUB)
-        .select("id", F.lit(0).cast("int").alias("dist"))
-        .localCheckpoint(eager=True)
+        .select("id", F.lit(0).cast(dtype).alias("dist"))
     )
-    for _ in range(BFS_ROUNDS):
-        reached = (
-            und.join(dist, und.subject == dist.id)
-            .select(
-                F.col("object").alias("id"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
+    return iterate(hub, relax, BFS_ROUNDS)
 
 
 def _bfs_sql() -> str:
@@ -1504,10 +1392,10 @@ def kg_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; the contract is "minimum total cost using at most
     BFS_ROUNDS hops", which the unrolled-CTE oracle states exactly.
 
-    Scale shape: identical to the BFS — each round is one join on the
-    frontier key plus one min groupBy, per-round persist/unpersist so
-    lineage stays flat; the weight column rides the same exchange the
-    unweighted edge join already pays (no extra shuffle for weights)."""
+    Scale shape: identical to the BFS (the same _hub_distances rounds)
+    — each round is one join on the frontier key plus one min groupBy;
+    the weight column rides the same exchange the unweighted edge join
+    already pays (no extra shuffle for weights)."""
     cc = kg_cooccurrence_counts(spark, sf_dir)
     w = cc.select(
         "subject", "object", F.expr("1000000L div n_docs").alias("w")
@@ -1519,26 +1407,7 @@ def kg_weighted_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w",
         )
     )
-    # per-round localCheckpoint: see kg_components (r7)
-    dist = (
-        und.select(F.col("subject").alias("id"))
-        .distinct()
-        .filter(F.col("id") == HUB)
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(BFS_ROUNDS):
-        reached = und.join(dist, und.subject == dist.id).select(
-            F.col("object").alias("id"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
+    return _hub_distances(und, F.col("w"), "long")
 
 
 def _weighted_bfs_sql() -> str:
@@ -1737,14 +1606,13 @@ def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge-level analog of kg_kcore_fixpoint and the denser-than-
     core cohesion standard (every k-truss is a subgraph of the
     (k−1)-core, not vice versa). Each round recomputes degree-oriented
-    triangle support on the surviving edges, peels, and truncates
-    lineage with localCheckpoint (the components_fixpoint OOM lesson).
-    Oracle contract is EXACT, mirroring kcore: peeling is monotone, an
-    oracle unrolled to KTRUSS_FIXPOINT_UNROLL rounds equals the
-    fixpoint whenever convergence takes ≤ that many rounds, and the
-    Spark side RAISES if it ever needs more — the two can never
-    silently diverge (the adversarial case, a triangle strip that
-    unravels one triangle per round, is exercised in tests)."""
+    triangle support on the surviving edges and peels. Oracle contract
+    is EXACT, mirroring kcore: peeling is monotone, an oracle unrolled
+    to KTRUSS_FIXPOINT_UNROLL rounds equals the fixpoint whenever
+    convergence takes ≤ that many rounds, and the Spark side RAISES if
+    it ever needs more — the two can never silently diverge (the
+    adversarial case, a triangle strip that unravels one triangle per
+    round, is exercised in tests)."""
     _, edges = get_kg(spark, sf_dir)
     e = edges.filter(
         F.col("predicate") == "biolink:correlated_with"
@@ -1753,30 +1621,16 @@ def kg_ktruss_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ktruss_fixpoint_frame(e: DataFrame, k: int) -> DataFrame:
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    for _ in range(KTRUSS_FIXPOINT_UNROLL):
-        if n_edges == 0:
-            break
-        kept = (
+    def peel(e: DataFrame) -> DataFrame:
+        return (
             _edge_support_frame(e)
             .filter(F.col("support") >= k - 2)
-            .select(
-                F.col("x").alias("subject"), F.col("y").alias("object")
-            )
-            .localCheckpoint(eager=True)
+            .select(F.col("x").alias("subject"), F.col("y").alias("object"))
         )
-        n_now = kept.count()
-        if n_now == n_edges:
-            break
-        e, n_edges = kept, n_now
-    else:
-        raise RuntimeError(
-            f"k-truss peeling did not converge within "
-            f"{KTRUSS_FIXPOINT_UNROLL} rounds — raise "
-            f"KTRUSS_FIXPOINT_UNROLL (and the oracle unroll with it)"
-        )
-    return _edge_support_frame(e)
+
+    return _edge_support_frame(
+        iterate(e, peel, KTRUSS_FIXPOINT_UNROLL, _nothing_peeled)
+    )
 
 
 def kg_schema_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2186,25 +2040,32 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     on summation order. Each round is one broadcast-or-copartitioned
     join (ranks ⋈ degrees), one message groupBy (partial-agg friendly),
     and one left join back to the node set — the canonical distributed
-    PageRank shape; production runs would checkpoint ranks per round to
-    cut lineage. The damp multiply is widened to DECIMAL(38,0)
-    (_rank_update_expr) so the former ~10^7-vertex star-graph int64
-    ceiling cannot occur; remaining int64 quantities are bounded by
-    total mass ≈ |V|·1e6 (safe to ~9e12 vertices)."""
+    PageRank shape (_rank_rounds). The damp multiply is widened to
+    DECIMAL(38,0) (_rank_update_expr) so the former ~10^7-vertex
+    star-graph int64 ceiling cannot occur; remaining int64 quantities
+    are bounded by total mass ≈ |V|·1e6 (safe to ~9e12 vertices)."""
     und = _und_cooc(spark, sf_dir)
-    # localCheckpoint the loop-invariant degree table and each round's
-    # ranks (r7; was persist+count+unpersist): checkpointing both
-    # materializes each round AND truncates its plan to a leaf, so
-    # round k's Catalyst analysis no longer re-nests every earlier
-    # round (the measured growing-round-wall effect) — the same
-    # discipline as the fixpoint loops. Tiny leaf frames; freed by the
-    # context cleaner when the build returns.
+    # the loop-invariant degree table is joined every round: checkpoint
+    # it for the reason plans.iterate checkpoints each round's ranks
     deg = und.groupBy(F.col("subject").alias("id")).agg(
         F.count("*").alias("deg")
     ).localCheckpoint(eager=True)
     r = deg.select("id", F.lit(_PPM).cast("long").alias("r"))
-    for _ in range(PR_ITERS):
-        contrib = r.join(deg, "id").select(
+    r = _rank_rounds(und, deg, r, _rank_update_expr("s"), ())
+    return r.select("id", F.col("r").alias("rank_ppm"))
+
+
+def _rank_rounds(
+    und: DataFrame, deg: DataFrame, r: DataFrame, update: str,
+    carry: tuple[str, ...],
+) -> DataFrame:
+    """PR_ITERS rounds of degree-normalized message passing from the
+    rank vector ``r`` (id, *carry, r) over ``deg`` (id, deg, *carry);
+    ``update`` maps the summed in-mass ``s`` (and the ``carry``
+    columns) to the next rank."""
+
+    def step(r: DataFrame) -> DataFrame:
+        contrib = r.join(deg.select("id", "deg"), "id").select(
             "id", F.expr("r div deg").alias("c")
         )
         msgs = (
@@ -2212,13 +2073,13 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("object").alias("mid"))
             .agg(F.sum("c").alias("s"))
         )
-        r = (
-            deg.select("id")
+        return (
+            deg.select("id", *carry)
             .join(msgs, F.col("id") == F.col("mid"), "left")
-            .select("id", F.expr(_rank_update_expr("s")).alias("r"))
-            .localCheckpoint(eager=True)
+            .select("id", *carry, F.expr(update).alias("r"))
         )
-    return r.select("id", F.col("r").alias("rank_ppm"))
+
+    return iterate(r, step, PR_ITERS)
 
 
 PPR_SEED_PREFIXES = ("CHEBI:", "DrugCentral:")  # chemical/drug nodes
@@ -2241,8 +2102,8 @@ def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     chemical/drug nodes) — the drug-centric importance ranking a
     repurposing consumer of this KG actually asks for, and the standard
     PPR formulation (teleport to seeds, not uniformly). Same
-    integer-ppm / DECIMAL(38,0) machinery and per-round persist
-    discipline as kg_pagerank, so the result is bit-identical at any
+    integer-ppm / DECIMAL(38,0) machinery and round body
+    (_rank_rounds) as kg_pagerank, so the result is bit-identical at any
     parallelism and in the unrolled-CTE oracle; only the base vector
     differs: seeds restart with PR_BASE_PPM, everything else restarts
     with 0, and the initial mass sits on the seeds."""
@@ -2251,7 +2112,6 @@ def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in PPR_SEED_PREFIXES:
         term = F.col("id").startswith(p)
         seed_pred = term if seed_pred is None else (seed_pred | term)
-    # localCheckpoint discipline: see kg_pagerank (r7)
     deg = (
         und.groupBy(F.col("subject").alias("id"))
         .agg(F.count("*").alias("deg"))
@@ -2265,21 +2125,7 @@ def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("r"),
     )
-    for _ in range(PR_ITERS):
-        contrib = r.join(deg.select("id", "deg"), "id").select(
-            "id", F.expr("r div deg").alias("c")
-        )
-        msgs = (
-            und.join(contrib, F.col("subject") == F.col("id"))
-            .groupBy(F.col("object").alias("mid"))
-            .agg(F.sum("c").alias("s"))
-        )
-        r = (
-            deg.select("id", "is_seed")
-            .join(msgs, F.col("id") == F.col("mid"), "left")
-            .select("id", "is_seed", F.expr(_ppr_update_expr("s")).alias("r"))
-            .localCheckpoint(eager=True)
-        )
+    r = _rank_rounds(und, deg, r, _ppr_update_expr("s"), ("is_seed",))
     return r.select("id", F.col("r").alias("ppr_ppm"))
 
 

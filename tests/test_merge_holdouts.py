@@ -410,3 +410,27 @@ def test_ego_export_hops_are_disjoint_and_edge_backed(spark):
         assert any(n in nbrs.get(m, set()) for (ss, m) in h1 if ss == s), (
             s, n,
         )
+
+
+def test_spanning_forest_raises_past_bfs_unroll_and_releases_cache(
+    spark, monkeypatch
+):
+    """A 7-path needs 6 BFS relaxation rounds from its root: with a
+    1-round cap the forest raises instead of returning a partial tree,
+    and the adjacency it persisted for the rounds is released on that
+    path too."""
+    import pytest
+
+    from kg_covid_19_spark.operators import holdouts
+
+    monkeypatch.setattr(holdouts, "FOREST_BFS_UNROLL", 1)
+    e = spark.range(6).select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("subject"),
+        F.concat(F.lit("r"), (F.col("id") + 1).cast("string")).alias("object"),
+        F.md5(F.col("id").cast("string")).alias("h"),
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        holdouts.spanning_forest_hashes(e)
+    assert cache.numCachedEntries() == before

@@ -537,3 +537,25 @@ def test_ktruss_raises_past_unroll(spark, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         queries.ktruss_fixpoint_frame(strip, 4)
+
+
+def test_kcore_fixpoint_raises_past_unroll(spark, monkeypatch):
+    """Cap exhaustion must RAISE, never return a partial peel: a 10-path
+    peels one node from each end per round, so it needs 5 rounds and a
+    2-round cap cannot finish it."""
+    import pytest
+
+    from kg_covid_19_spark.plans import queries
+
+    monkeypatch.setattr(queries, "KCORE_FIXPOINT_UNROLL", 2)
+    path = spark.range(9).select(
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("subject"),
+        F.concat(F.lit("p"), (F.col("id") + 1).cast("string")).alias("object"),
+    )
+    und = path.unionAll(
+        path.select(
+            F.col("object").alias("subject"), F.col("subject").alias("object")
+        )
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        queries.kcore_fixpoint_frame(und, 2)
